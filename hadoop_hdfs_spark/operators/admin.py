@@ -824,8 +824,6 @@ LEFT JOIN inodes i ON i.id = c.file_id
     "write-locked iteration.",
 )
 def a18_misreplicated_scan(e) -> DataFrame:
-    # folded onto the shared blocksMap pin (r12): the r11 rotation budget
-    # that kept this on a private un-pinned rollup has slack this round
     from .blocks import _block_replica_counts
 
     inodes = e["inodes"]

@@ -38,14 +38,13 @@ def _block_replica_counts(e) -> DataFrame:
     """blocks + per-block replica folds (counts, copy source, racks,
     state-aware counts) — the rollup most queries start from.
 
-    Pinned per session since r11 (the blocksMap-in-RAM analog, deferred
-    from r8 for rotation-budget reasons — this optimization round has the
-    slack): one blocks|><|replicas shuffle + rollup per session instead
-    of one per caller per pass cuts the shared exchange out of the
-    registered callers' warm paths (f5, j5, a3, u3, w6, w6b, t6 — guide
-    §2.4: two operations keyed the same way share one exchange; here the
-    sharing is across queries). Frame size is block-population-scale
-    (10 narrow columns), the same class as the pinned entity caches.
+    Pinned per session (the blocksMap-in-RAM analog): one blocks|><|replicas
+    shuffle + rollup per session instead of one per caller per pass cuts
+    the shared exchange out of the registered callers' warm paths (f5, j5,
+    a3, u3, w6, w6b, t6 — guide §2.4: two operations keyed the same way
+    share one exchange; here the sharing is across queries). Frame size is
+    block-population-scale (10 narrow columns), the same class as the
+    pinned entity caches.
 
     ``min_live_source`` (min non-corrupt replica's datanode, NULL when
     none) rides along for t6_replication_work's copy-source choice, and
@@ -65,8 +64,7 @@ def _block_replica_counts(e) -> DataFrame:
     replica whose datanode is unknown to the dim contributes to
     total_replicas/live but to neither state-aware count nor any rack —
     the oracles' inner replicas|><|datanodes derivations. Every consumer
-    reads this one pin since r12 (a10/a18's r11 rotation-budget copy of
-    the bare rollup is folded back in).
+    reads this one pin.
     """
     blocks, replicas, datanodes = e["blocks"], e["replicas"], e["datanodes"]
     return eager_cache_thunk(
@@ -929,8 +927,6 @@ FROM ({_BLOCK_REPL}) c
     "with minReplication 1.",
 )
 def a10_safemode(e) -> DataFrame:
-    # folded onto the shared blocksMap pin (r12): the r11 rotation budget
-    # that kept this on a private un-pinned rollup has slack this round
     counts = _block_replica_counts(e)
     return counts.agg(
         F.count("*").alias("total_blocks"),

@@ -48,3 +48,34 @@ def read_schema_of_first_scan(df: DataFrame) -> str:
     if line is None:
         raise ValueError("plan contains no file scan with a ReadSchema")
     return line
+
+
+def _tree_indent(line: str) -> int:
+    """Length of the tree-rendering prefix (spaces and :, +, -, | glyphs)."""
+    return len(re.match(r"^[\s:+|-]*", line).group(0))
+
+
+def strip_cached_plan_bodies(plan: str) -> str:
+    """Drop the physical plan bodies printed beneath InMemoryRelation nodes.
+
+    An InMemoryRelation is a LEAF of the logical plan, but toString renders
+    its cachedPlan (a physical AdaptiveSparkPlan) indented beneath it — and
+    that body is NOT stable run to run: plan_id counters are session-global,
+    and AQE re-plans in place, so the same cache captured before/after
+    materialization prints raw Exchanges vs ShuffleQueryStage/ReusedExchange
+    subtrees. The InMemoryRelation line itself (output schema + storage
+    level) is kept, so an assertion about a query's OWN operators does not
+    depend on which tests materialized the shared caches first.
+    """
+    out = []
+    lines = plan.splitlines()
+    i = 0
+    while i < len(lines):
+        line = lines[i]
+        out.append(line)
+        i += 1
+        if "InMemoryRelation" in line:
+            base = _tree_indent(line)
+            while i < len(lines) and _tree_indent(lines[i]) > base:
+                i += 1
+    return "\n".join(out)

@@ -19,25 +19,22 @@ instead (state stores amortize across long-lived micro-batches there).
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 _KEY = "spark.sql.shuffle.partitions"
 
+# Measured (r12): the full drain set at sf0.1 ran 118 / 75 / 67 / 102 s at
+# 2 / 8 / 16 / 32 partitions (8 vs 16 within box noise) — per-batch
+# parallelism and store commits trade off, and 8 sits at the flat bottom.
+_DRAIN_PARTITIONS = 8
+
 
 @contextmanager
-def drain_partitions(spark: SparkSession, n: int | None = None):
-    if n is None:
-        # 8 re-confirmed by measurement (r12): the full drain set at
-        # sf0.1 ran 118 / 75 / 67 / 102 s at 2 / 8 / 16 / 32 partitions
-        # (8 vs 16 within box noise) — per-batch parallelism and store
-        # commits trade off, and the r11 value sits at the flat bottom.
-        # Env knob so a deployment can size it to sustained throughput.
-        n = int(os.environ.get("SPARK_GRAFT_DRAIN_PARTITIONS", "8"))
+def drain_partitions(spark: SparkSession):
     prev = spark.conf.get(_KEY)
-    spark.conf.set(_KEY, str(n))
+    spark.conf.set(_KEY, str(_DRAIN_PARTITIONS))
     try:
         yield
     finally:

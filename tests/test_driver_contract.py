@@ -45,225 +45,17 @@ def test_bare_driver_session_runs_contract():
     assert "BARE-DRIVER-OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-2000:]
 
 
-def test_rotation_queues_most_deserving_queries():
-    """The mechanized 50-slot rotation (registry._driver_order over the
-    CORRECTNESS_r*.json artifacts + the fingerprint manifest) must queue
-    exactly the queries with the greatest verification need: every
-    never-verified or fingerprint-changed query inside the budget, and
-    nothing outside the first 50 staler than a stale query inside it.
-    Guards the r3 failure mode where a forgotten hand-reorder hides a
-    regression for a full round."""
-    from hadoop_hdfs_spark import manifest, registry
+def test_catalog_serves_registration_order():
+    """queries() and oracle_sql() iterate the registry as registered: no
+    repo artifact decides the order, so a source edit needs no
+    regeneration step."""
+    from hadoop_hdfs_spark import registry
 
-    registry._import_operator_modules()
-    order = registry._driver_order(list(registry._REGISTRY))
-    latest = registry._latest_green_round()
-    budget = set(order[: registry._DRIVER_BUDGET])
-
-    m = manifest.load_manifest()
-    touched = manifest.touched_queries(m)
-    known = set(m.get("queries", {}))
-    needy = [
-        n for n in order
-        if n not in latest or n in touched or n not in known
+    names = list(registry.queries())
+    assert names == list(registry._REGISTRY)
+    assert list(registry.oracle_sql()) == [
+        n for n in names if registry._REGISTRY[n].oracle is not None
     ]
-    assert len(needy) <= registry._DRIVER_BUDGET, (
-        f"{len(needy)} tier-0/1 queries exceed the {registry._DRIVER_BUDGET}"
-        " driver budget — some new/touched queries will not get a row this round"
-    )
-    assert set(needy) <= budget, sorted(set(needy) - budget)
-
-    stale_inside = [latest[n] for n in budget if n in latest]
-    outside = [latest[n] for n in order[registry._DRIVER_BUDGET:]]
-    if stale_inside and outside:
-        # stalest-first: nothing left outside is staler than what we queued
-        assert min(outside) >= max(
-            r for r in stale_inside
-            if r == min(stale_inside)
-        ), (min(outside), min(stale_inside))
-    # and every query outside the budget is no staler than the pigeonhole
-    # floor for the CURRENT catalog size: with C queries and a 50-slot
-    # budget, stalest-first rotation bounds staleness at ceil(C/50) rounds
-    # (tighter is impossible once C > 2x50 — the r7 state, where the 50
-    # r4-stale rows exactly fill the budget and every new registration
-    # displaces one)
-    import math
-
-    current_round = max(latest.values(), default=0) + 1
-    bound = max(2, math.ceil(len(order) / registry._DRIVER_BUDGET))
-    assert all(
-        current_round - latest[n] <= bound
-        for n in order[registry._DRIVER_BUDGET:]
-    ), sorted(
-        (latest[n], n)
-        for n in order[registry._DRIVER_BUDGET:]
-        if current_round - latest[n] > bound
-    )
-
-
-def _simulate_rotation_breach(this_order, latest, budget, needy=()):
-    """Forward-simulate the rotation (judge r8 #3): round 0 runs with the
-    REAL tiered driver order (capturing this round's tier-0/1 spend).
-    Tier-0/1 rows that DON'T get a slot stay needy — the manifest only
-    promotes rows the driver actually verified — so they keep outranking
-    stale rows in later rounds too; beyond that, later rounds assume zero
-    NEW spend. Before each simulated driver run, apply the contract
-    test's staleness check to the rows left outside the budget. Returns
-    (round, breaching rows) for the first breach, else None — a non-None
-    result means THIS round's new/touched spend has already locked in a
-    bound breach even if every future round spends nothing."""
-    import math
-
-    bound = max(2, math.ceil(len(this_order) / budget))
-    r0 = max(latest.values(), default=0) + 1
-    sim = dict(latest)
-    pending = set(needy)
-    for i in range(2 * bound + 1):
-        cur = r0 + i
-        ranked = (
-            this_order
-            if i == 0
-            else sorted(
-                this_order,
-                key=lambda n: (n not in pending, sim.get(n, 0)),
-            )
-        )
-        breach = [
-            n for n in ranked[budget:] if cur - sim.get(n, 0) > bound
-        ]
-        if breach:
-            return cur, sorted((sim.get(n, 0), n) for n in breach)
-        for n in ranked[:budget]:
-            sim[n] = cur
-            pending.discard(n)
-    return None
-
-
-def test_rotation_budget_lookahead():
-    """Round-close arithmetic guard: simulate this round's driver run and
-    every following round at zero spend — no current OR locked-in future
-    staleness-bound breach is allowed. The r8 breach (five rows 4 rounds
-    stale) was only caught by the judge because this check didn't exist;
-    any round overspending its new/touched slots fails HERE, before the
-    driver runs."""
-    from hadoop_hdfs_spark import manifest, registry
-
-    registry._import_operator_modules()
-    order = registry._driver_order(list(registry._REGISTRY))
-    latest = registry._latest_green_round()
-    needy = {n for n in order if n not in latest} | manifest.touched_queries()
-    breach = _simulate_rotation_breach(
-        order, latest, registry._DRIVER_BUDGET, needy
-    )
-    assert breach is None, (
-        f"rotation breach locked in at round {breach[0]}: {breach[1]} — "
-        "this round's new/touched spend exceeds the drain rate; defer "
-        "registrations or semantic edits"
-    )
-
-
-def test_rotation_budget_lookahead_fires_on_overspend():
-    """The guard must FIRE on a synthetic over-budget manifest: touch more
-    than two budgets' worth of fresh greens and the needy backlog starves
-    the stale tail past the bound (needy rows stay tier 1 until verified,
-    so they keep crowding in the FOLLOWING rounds too)."""
-    import copy
-
-    from hadoop_hdfs_spark import manifest, registry
-
-    registry._import_operator_modules()
-    names = list(registry._REGISTRY)
-    latest = registry._latest_green_round()
-    m = copy.deepcopy(manifest.load_manifest())
-    fresh = sorted(
-        (n for n in names if n in latest), key=lambda n: -latest[n]
-    )[: 2 * registry._DRIVER_BUDGET + 20]
-    for n in fresh:
-        m["queries"][n]["fingerprint"] = "0" * 64
-    order = registry._driver_order(names, manifest=m)
-    needy = {n for n in order if n not in latest} | manifest.touched_queries(m)
-    breach = _simulate_rotation_breach(
-        order, latest, registry._DRIVER_BUDGET, needy
-    )
-    assert breach is not None
-
-
-def test_manifest_is_fresh_and_complete():
-    """The committed fingerprint manifest must match the working tree:
-    every source file's hash as recorded, every registered query present.
-    A code change without `python -m hadoop_hdfs_spark.manifest` fails
-    here — a stale manifest (the r4 hand-list failure mode) cannot ship."""
-    from hadoop_hdfs_spark import manifest, registry
-
-    m = manifest.load_manifest()
-    assert m.get("queries"), "QUERY_MANIFEST.json missing — regenerate it"
-    current_files = manifest.source_file_hashes()
-    stale = {
-        p
-        for p in set(current_files) | set(m["files"])
-        if current_files.get(p) != m["files"].get(p)
-    }
-    assert not stale, (
-        f"manifest stale for {sorted(stale)}: run "
-        "`python -m hadoop_hdfs_spark.manifest` and commit the result"
-    )
-    registry._import_operator_modules()
-    missing = set(registry._REGISTRY) - set(m["queries"])
-    assert not missing, f"queries missing from manifest: {sorted(missing)}"
-
-
-def test_rebase_green_refuses_on_changed_sources(monkeypatch):
-    """--rebase-green blesses stored fingerprints as green, so it must
-    refuse when any semantics-bearing source changed since the committed
-    manifest (ADVICE r6) — otherwise a semantically edited query would be
-    silently rebased to green without re-verification. The refusal fires
-    before any Spark session is created (fast)."""
-    import pytest
-
-    from hadoop_hdfs_spark import manifest
-
-    current = manifest.source_file_hashes()
-    stale = dict(current)
-    victim = next(
-        p for p in sorted(stale) if p != "hadoop_hdfs_spark/manifest.py"
-    )
-    stale[victim] = "0" * 64
-    monkeypatch.setattr(
-        manifest, "load_manifest", lambda: {"queries": {}, "files": stale}
-    )
-    with pytest.raises(ValueError, match="rebase-green refused"):
-        manifest.regenerate(rebase_green=True)
-
-
-def test_synthetic_fingerprint_edit_lands_in_tier_1():
-    """Mechanized touched-detection: flip one green query's fingerprint in
-    an in-memory manifest and the rotation must pull it inside the budget,
-    ahead of every merely-stale query — with NO hand-list involved."""
-    import copy
-
-    from hadoop_hdfs_spark import manifest, registry
-
-    registry._import_operator_modules()
-    names = list(registry._REGISTRY)
-    latest = registry._latest_green_round()
-    m = copy.deepcopy(manifest.load_manifest())
-    # pick the green query with the FRESHEST row — the one staleness alone
-    # would queue last, so tier 1 is what moves it
-    victim = max((n for n in names if n in latest), key=lambda n: latest[n])
-    m["queries"][victim]["fingerprint"] = "0" * 64
-    order = registry._driver_order(names, manifest=m)
-    budget = order[: registry._DRIVER_BUDGET]
-    assert victim in budget
-    # it must precede every tier-2 (merely stale) query
-    tier2 = [
-        n for n in order
-        if n in latest and n != victim and n not in manifest.touched_queries(m)
-    ]
-    # tier2 can be empty in the (legitimate) state where every green query
-    # is simultaneously touched — min() over [] would ERROR the test
-    # instead of making a meaningful assertion (ADVICE r5)
-    if tier2:
-        assert order.index(victim) < min(order.index(n) for n in tier2)
 
 
 def test_nn_throughput_harness_runs():

@@ -120,8 +120,7 @@ def test_a15_plan_is_sort_free_and_broadcasts_sketch_row(spark, sf_dir):
     sketch row against the second linear scan — no Sort touches the
     corpus (the whole point of the sketch formulation vs a14's per-group
     sort), no shuffle beyond the two groupBys' partial aggregates."""
-    from hadoop_hdfs_spark.manifest import _strip_cached_plan_bodies
-    from hadoop_hdfs_spark.plans import formatted_plan
+    from hadoop_hdfs_spark.plans import formatted_plan, strip_cached_plan_bodies
 
     plan = formatted_plan(QUERIES["a15_size_sketch"](spark, sf_dir)).split(
         "\n\n"
@@ -130,10 +129,9 @@ def test_a15_plan_is_sort_free_and_broadcasts_sketch_row(spark, sf_dir):
     # first in the session, the entity caches may render their raw
     # derivations (which legitimately contain Sorts, e.g. the inodes
     # row_number window) beneath the InMemoryRelation leaves — strip those
-    # bodies exactly like the fingerprint manifest does, or the assertion
-    # flakes on test ordering (pre-existing; observed running test_plans
-    # then test_sketch alone together).
-    plan = _strip_cached_plan_bodies(plan)
+    # bodies, or the assertion flakes on test ordering (pre-existing;
+    # observed running test_plans then test_sketch alone together).
+    plan = strip_cached_plan_bodies(plan)
     assert "BroadcastHashJoin" in plan
     # the only Sort allowed is inside a SortAggregate fallback, which the
     # sketch aggregates do not take; assert none at all
