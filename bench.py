@@ -141,7 +141,7 @@ def main() -> None:
         for name in _DRAIN_MEMO_GATES:
             if name not in qs or name in errors:
                 continue
-            _evict_result_memo(name)
+            registry.evict(spark, sf_dir, _DRAIN_MEMO_GATES[name])
             try:
                 t0 = time.perf_counter()
                 qs[name](spark, sf_dir).count()
@@ -591,20 +591,22 @@ def _write_kept_section(md_path: str, name: str, body: str) -> None:
 # streaming certification drains + the quota/token monitors built on the
 # same pattern): the bench's redrain pass evicts and re-times each one so
 # the true drain cost is a first-class field of the emitted line.
-_DRAIN_MEMO_GATES = (
-    "t14_stream_rates",
-    "t17_stream_sessions",
-    "t18_stream_open_close",
-    "t19_stream_dedup",
-    "t20_stream_enrich",
-    "t21_pending_timeout_stream",
-    "t22_heartbeat_liveness_stream",
-    "t23_lease_expiry_stream",
-    "t26_token_expiry_stream",
-    "t1b_quota_rejections",
-    "t1c_ds_quota_rejections",
-    "t2c_checkpoint_replay",
-)
+_DRAIN_MEMO_GATES = {
+    # registered query -> the eager_cache tag its drained result is
+    # pinned under (tests/test_registry_cache.py checks each tag exists)
+    "t14_stream_rates": "t14_rates_result",
+    "t17_stream_sessions": "t17_sessions_result",
+    "t18_stream_open_close": "t18_pairs_result",
+    "t19_stream_dedup": "t19_dedup_result",
+    "t20_stream_enrich": "t20_enrich_result",
+    "t21_pending_timeout_stream": "t21_pending",
+    "t22_heartbeat_liveness_stream": "t22_liveness",
+    "t23_lease_expiry_stream": "t23_leases",
+    "t26_token_expiry_stream": "t26_tokens",
+    "t1b_quota_rejections": "t1b_quota",
+    "t1c_ds_quota_rejections": "t1c_quota",
+    "t2c_checkpoint_replay": "t2c_checkpoint",
+}
 
 _STREAM_GATES = {
     # registered query -> its /tmp stage-dir tag (streaming/staging.py).
@@ -620,27 +622,6 @@ _STREAM_GATES = {
     "t23_lease_expiry_stream": "t23_leases",
     "t2c_checkpoint_replay": "t2c_edits",
 }
-
-
-def _evict_result_memo(qname: str) -> None:
-    """The certification gates memoize their DRAINED result frame per
-    session (the bench headline deliberately measures the warm catalog,
-    where a gate certifies once). The staging/drain split exists to time
-    the REAL drain, so the memo must be evicted between the cold and warm
-    runs — otherwise drain_s measures a cache read and staging_s absorbs
-    the actual drain cost."""
-    pfx = qname.split("_")[0] + "_"
-    for key in [k for k in registry._CACHED if k[2].startswith(pfx)]:
-        frame = registry._CACHED.pop(key)
-        try:
-            frame.unpersist()
-        except Exception:
-            pass
-    # the prepared-plan memo (r11) would otherwise hand back a frame that
-    # still embeds the just-unpersisted drain pin — evict it so the warm
-    # run rebuilds and re-drains for real
-    for key in [k for k in registry._QUERY_PLANS if k[2] == qname]:
-        registry._QUERY_PLANS.pop(key, None)
 
 
 def streaming_probe() -> None:
@@ -675,7 +656,8 @@ def streaming_probe() -> None:
             t0 = time.perf_counter()
             qs[qname](spark, d).count()
             cold = time.perf_counter() - t0
-            _evict_result_memo(qname)  # warm must re-run the REAL drain
+            # warm must re-run the REAL drain
+            registry.evict(spark, d, _DRAIN_MEMO_GATES[qname])
             t0 = time.perf_counter()
             qs[qname](spark, d).count()
             warm = time.perf_counter() - t0

@@ -244,7 +244,7 @@ def _hftp_fixture(inodes: DataFrame, sf_dir: str) -> str:
 
 
 def _s5_register() -> None:
-    from .registry import eager_cache_thunk, register as _register_query
+    from .registry import eager_cache, register as _register_query
 
     @_register_query(
         "s5_hftp_listing_scan",
@@ -287,11 +287,11 @@ WHERE (path = '{_S5_ROOT}' OR path LIKE '{_S5_ROOT}/%')
                 .load()
             )
 
-        return eager_cache_thunk(e, "s5_hftp", build)
+        return eager_cache(e, "s5_hftp", build)
 
 
 def _s5b_register() -> None:
-    from .registry import eager_cache_thunk, register as _register_query
+    from .registry import eager_cache, register as _register_query
 
     @_register_query(
         "s5b_hftp_direct_children",
@@ -330,7 +330,7 @@ WHERE (path = '{_S5_ROOT}'
                 .load()
             )
 
-        return eager_cache_thunk(e, "s5b_hftp", build)
+        return eager_cache(e, "s5b_hftp", build)
 
 
 _s5_register()
@@ -388,7 +388,7 @@ _S5C_LEN = 256
 
 def _s5c_register() -> None:
     from .blobfixture import resolve_blob_corpus
-    from .registry import eager_cache_thunk, register as _register_query
+    from .registry import eager_cache, register as _register_query
 
     blob_dir, blob_glob = resolve_blob_corpus()
 
@@ -492,7 +492,7 @@ FROM s5cr
                 " length long, range_md5 string",
             )
 
-        return eager_cache_thunk(e, "s5c_range_read", build)
+        return eager_cache(e, "s5c_range_read", build)
 
 
 _s5c_register()

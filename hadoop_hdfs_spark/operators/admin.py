@@ -434,10 +434,10 @@ FROM s1b
     "size.",
 )
 def s1_binary_block_scan(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
     spark = e["region"].sparkSession
-    return eager_cache_thunk(
+    return eager_cache(
         e, "s1_block_scan",
         lambda: block_scan_df(spark).drop("head_crc32"),
     )

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..entities import HEARTBEAT_EXPIRY_MS, NOW_MS
-from ..registry import eager_cache, eager_cache_thunk, register
+from ..registry import eager_cache, register
 from ..session import fan_out
 
 # Shared DuckDB fragment: per-block replica rollup.
@@ -67,7 +67,7 @@ def _block_replica_counts(e) -> DataFrame:
     reads this one pin.
     """
     blocks, replicas, datanodes = e["blocks"], e["replicas"], e["datanodes"]
-    return eager_cache_thunk(
+    return eager_cache(
         e,
         "block_repl",
         lambda: blocks.join(replicas, "block_id", "left")
@@ -539,10 +539,10 @@ WHERE c.live < i.replication
     "on the hottest join for a predicate that only needs 'fewer than 2'.",
 )
 def w2_replication_priority(e) -> DataFrame:
-    # thunk form (r11): on a memo hit the queue must not pay the full
+    # built on a miss (r11): on a memo hit the queue must not pay the full
     # three-way-join construction (hundreds of py4j calls) just to throw
-    # the frame away — see registry.eager_cache_thunk
-    return eager_cache_thunk(e, "w2_queue", lambda: _build_w2_queue(e))
+    # the frame away — see registry.eager_cache
+    return eager_cache(e, "w2_queue", lambda: _build_w2_queue(e))
 
 
 def _build_w2_queue(e) -> DataFrame:
@@ -643,7 +643,7 @@ WHERE t.live > t.replication AND t.rk <= t.live - t.replication
     "live-expected.",
 )
 def u3_excess_replicas(e) -> DataFrame:
-    return eager_cache_thunk(e, "u3_excess", lambda: _build_u3_excess(e))
+    return eager_cache(e, "u3_excess", lambda: _build_u3_excess(e))
 
 
 def _build_u3_excess(e) -> DataFrame:
@@ -852,7 +852,7 @@ def a9b_content_checksum(e) -> DataFrame:
     # The pin tag carries the LIVE corpus location: the shard plan is a
     # function of the blob dir/glob (tests repoint _BLOB_DIR per case), so
     # a dir-agnostic tag would serve one corpus's plan to another.
-    plan_df = eager_cache_thunk(
+    plan_df = eager_cache(
         e, f"a9b_shard_plan:{_BLOB_DIR}/{_BLOB_GLOB}", _build_shard_plan
     )
 

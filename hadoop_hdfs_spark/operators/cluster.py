@@ -1108,15 +1108,11 @@ def j10_replication_targets(e) -> DataFrame:
     from .admin import t6_replication_work
     from .blocks import w2_replication_priority
 
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
     # the per-round work queue is small (2/source cap) and already the
     # product of the full w2 window chain — pin it once per session/SF.
-    # THUNK form throughout (r11): eager_cache(e, tag, expr) evaluates
-    # expr — the whole scheduler tree, hundreds of py4j calls — before
-    # the memo is even consulted, so warm invocations paid full
-    # construction for frames they never rebuild.
-    work = eager_cache_thunk(
+    work = eager_cache(
         e,
         "t6_work_blocks",
         lambda: t6_replication_work(e).select("block_id").distinct(),
@@ -1128,7 +1124,7 @@ def j10_replication_targets(e) -> DataFrame:
     # builds it once per round; target choice consumes it), so it is
     # pinned per session/SF too — re-deriving the w2 rollup + join per
     # invocation paid ~0.7 s/run at sf0.1 for a queue-sized frame.
-    need = eager_cache_thunk(
+    need = eager_cache(
         e,
         "j10_need",
         lambda: work.join(
@@ -1151,7 +1147,7 @@ def j10_replication_targets(e) -> DataFrame:
     # time), so they pin per session/SF like the queue — otherwise every
     # invocation re-scans the full replica table twice (anti-join leg +
     # rack leg) to rebuild a few-thousand-row set.
-    holder_nodes = eager_cache_thunk(
+    holder_nodes = eager_cache(
         e,
         "j10_holder_nodes",
         lambda: r.filter(~F.col("is_corrupt"))
@@ -1160,7 +1156,7 @@ def j10_replication_targets(e) -> DataFrame:
     )
     # queue-sized like its source frame, and its distinct costs an
     # exchange per pass — pinned with the rest of the round state (r11)
-    holder_racks = eager_cache_thunk(
+    holder_racks = eager_cache(
         e,
         "j10_holder_racks",
         lambda: holder_nodes.join(
@@ -1384,9 +1380,9 @@ bstate_{c} AS MATERIALIZED (
     "no float fold order exists to disagree on.",
 )
 def j4c_balancer_convergence(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "j4c_traj", lambda: _j4c_run(e))
+    return eager_cache(e, "j4c_traj", lambda: _j4c_run(e))
 
 
 def _j4c_run(e) -> DataFrame:

@@ -367,9 +367,9 @@ def a2_quota_check(e) -> DataFrame:
     # .java:91-111), so the quota scan never re-walks the tree. The pin
     # is quota-dir-count-sized; the per-pass ancestor explode over the
     # full namespace (the query's whole cost) happens once per session.
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    summary = eager_cache_thunk(
+    summary = eager_cache(
         e,
         "a2_quota_summary",
         lambda: content_summary_all(

@@ -20,7 +20,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import eager_cache, register, eager_cache_thunk
+from ..registry import eager_cache, register
 from ..session import fan_out
 
 N_PLANES = 8
@@ -95,7 +95,7 @@ def _quantized_vecs(e) -> DataFrame:
             "embedding", lambda x: F.floor(x.cast("double") * 1000000).cast("long")
         ).alias("xe"),
     )
-    return eager_cache_thunk(e, "ivf_xe", lambda: xe)
+    return eager_cache(e, "ivf_xe", lambda: xe)
 
 
 def _label_centroids(e: dict, xe: DataFrame) -> DataFrame:
@@ -123,7 +123,7 @@ def _label_centroids(e: dict, xe: DataFrame) -> DataFrame:
             ).alias("ce")
         )
 
-    return eager_cache_thunk(e, "ivf_label_centroids", _build)
+    return eager_cache(e, "ivf_label_centroids", _build)
 
 
 def _sq_dist(xe_col, ce_col):
@@ -226,7 +226,7 @@ def s_knn_hyperplane_lsh(e) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    sig = eager_cache_thunk(  # eager: both join sides read it; thunk —
+    sig = eager_cache(  # eager: both join sides read it; lazy build —
         # the 8 hyperplane-dot expressions are construction-heavy (r11)
         e, "hyperplane_sig", lambda: vecs.withColumn("bucket", _spark_sig(F.col("v")))
     )
@@ -372,7 +372,7 @@ def d_semdedup(e) -> DataFrame:
         _icos_e6(F.col("xe"), F.col("ce")).alias("cent_cos_e6"),
     )
     raw_base = base
-    base = eager_cache_thunk(  # self-join reads both sides
+    base = eager_cache(  # self-join reads both sides
         e, "semdedup_base", lambda: raw_base
     )
     a = fan_out(
@@ -578,14 +578,12 @@ def _mrl_recall(xe: DataFrame, e=None) -> DataFrame:
         (F.col("s16") + F.col("s17_32")).alias("d32"),
     )
     if e is not None:  # test path passes a bare clustered frame, uncached
-        from ..registry import corpus_pin
-
         raw_pairs = pairs
         # three windows read it; the K x N pair grid is CORPUS-scale
         # (grows with the vector population), so the pin is bounded by
-        # corpus_pin (r12) — past the source-size budget the windows
+        # the corpus budget (r12) — past the source-size budget the windows
         # recompute the grid from the parquet inputs
-        pairs = corpus_pin(
+        pairs = eager_cache(
             e, "mrl_pairs", lambda: raw_pairs, source="embeddings"
         )
 

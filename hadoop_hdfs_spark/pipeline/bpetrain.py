@@ -258,9 +258,9 @@ def _bpe_apply_oracle() -> str:
     "cannot go (tests/test_bpe_property.py).",
 )
 def t_bpe_apply(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(
+    return eager_cache(
         e, "bpe_apply_counts",
         lambda: bpe_apply(e["documents"], t_bpe_train(e)),
     )
@@ -283,9 +283,9 @@ def t_bpe_apply(e) -> DataFrame:
     "same loop unrolled into materialized CTEs.",
 )
 def t_bpe_train(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "bpe_train_merges", lambda: _bpe_train_run(e))
+    return eager_cache(e, "bpe_train_merges", lambda: _bpe_train_run(e))
 
 
 def train_merges(

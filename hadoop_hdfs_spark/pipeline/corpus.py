@@ -150,9 +150,9 @@ def d_near_dup_clusters(e) -> DataFrame:
     # form: the loop runs jobs while BUILDING the frame, so it must not
     # execute at all on a cache hit. The frame itself is
     # localCheckpoint-truncated; the pin is label-table-sized.
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(
+    return eager_cache(
         e, "cc_labels", lambda: near_dup_clusters(d_minhash_lsh(e))
     )
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import corpus_pin, eager_cache, eager_cache_thunk, register
+from ..registry import eager_cache, register
 from ..session import fan_out
 
 N_HASH = 16
@@ -65,13 +65,15 @@ def _shingles(docs: DataFrame) -> DataFrame:
 
 def _shingles_cached(e) -> DataFrame:
     """The shingle table, pinned per session WHILE THE CORPUS IS SMALL
-    (thunk form so a memo hit skips the split/transform construction).
+    (built on a miss, so a memo hit skips the split/transform construction).
     This frame is CORPUS-scale — O(corpus tokens), not postings- or
-    model-table-scale — so the pin is bounded by registry.corpus_pin
+    model-table-scale — so the pin is bounded by the corpus budget
     (r12): past the source-size budget every consumer recomputes the
     shingles from the parquet inputs instead of holding the exploded
     corpus in executor storage."""
-    return corpus_pin(e, "shingles", lambda: _shingles(e["documents"]))
+    return eager_cache(
+        e, "shingles", lambda: _shingles(e["documents"]), source="documents"
+    )
 
 
 @register(
@@ -187,7 +189,7 @@ def _minhash_bands(e) -> DataFrame:
         ).alias(f"band{b}")
         for b in range(N_BANDS)
     ]
-    return eager_cache_thunk(
+    return eager_cache(
         e, "minhash_bands", lambda: sig.select("doc_id", *band_cols)
     )
 
@@ -416,13 +418,14 @@ def d_ngram_jaccard(e, max_doc_freq: int | None = None) -> DataFrame:
     # the hot-set rollup): Catalyst replicates the explode per lineage use,
     # so un-pinned it ran twice per query per pass (r11; guide §2.4). The
     # frame is CORPUS-scale (one row per shingle occurrence — O(corpus
-    # tokens), 3 narrow columns), so the pin is bounded by corpus_pin
-    # (r12): past the source-size budget both legs recompute the explode
-    # instead of holding the exploded corpus in executor storage.
-    tok = corpus_pin(
+    # tokens), 3 narrow columns), so the pin is bounded by the corpus
+    # budget (r12): past it both legs recompute the explode instead of
+    # holding the exploded corpus in executor storage.
+    tok = eager_cache(
         e,
         "jaccard_postings",
         lambda: sh.select("doc_id", "lang", F.explode("sh").alias("s")),
+        source="documents",
     )
     if max_doc_freq is not None:
         # Stop-shingle guard for skewed corpora: a shingle appearing in more
@@ -447,8 +450,11 @@ def d_ngram_jaccard(e, max_doc_freq: int | None = None) -> DataFrame:
         # aggregations per pass). The tag carries the cap value — callers
         # with a different max_doc_freq (the cap-equivalence tests) must
         # never share a pin
-        tok = corpus_pin(
-            e, f"jaccard_postings_capped_{max_doc_freq}", _capped
+        tok = eager_cache(
+            e,
+            f"jaccard_postings_capped_{max_doc_freq}",
+            _capped,
+            source="documents",
         )
     a = tok.select(
         F.col("doc_id").alias("a_id"), F.col("lang").alias("lang_a"), "s"
@@ -581,7 +587,7 @@ def d_embedding_cosine(e) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     raw_vecs = vecs
-    vecs = eager_cache_thunk(  # eager: self-join reads both branches
+    vecs = eager_cache(  # eager: self-join reads both branches
         e, "cosine_vecs", lambda: raw_vecs
     )
     # left side repartitioned — one parquet file must not mean one task for
@@ -899,10 +905,10 @@ def d_embedding_cosine_lsh(e) -> DataFrame:
             sig = sig + F.when(dot > 0, 1 << j).otherwise(0)
         return sig.cast("int")
 
-    # thunk (r11): the 16 hyperplane-dot expressions are ~1000 py4j calls
+    # built on a miss (r11): the 16 hyperplane-dot expressions are ~1000 py4j calls
     # to construct — measured 1.26 s per invocation spent BUILDING the
     # signature frame that the memo then discarded
-    sig = eager_cache_thunk(
+    sig = eager_cache(
         e,
         "emb_lsh_sig",
         lambda: vecs.select(
@@ -968,10 +974,9 @@ def _span_occ(e) -> DataFrame:
     """Positional span table (doc_id, start, span-hash), shared by
     d_span_dedup (which only needs the hash column) and d_span_removal
     (which needs positions) — one frame instead of two. CORPUS-scale
-    (one row per token position), so the pin is bounded by corpus_pin
-    (r12): past the source-size budget consumers recompute the span
-    explode from the parquet inputs instead of holding it in executor
-    storage."""
+    (one row per token position), so the pin is bounded by the corpus
+    budget (r12): past it consumers recompute the span explode from the
+    parquet inputs instead of holding it in executor storage."""
     d = fan_out(e["documents"])
     toks = F.split("text", " ")
     occ_arr = F.when(
@@ -984,12 +989,13 @@ def _span_occ(e) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<struct<s:int,h:string>>"))
-    return corpus_pin(
+    return eager_cache(
         e,
         "dedup_span_occ",
         lambda: d.select("doc_id", F.explode(occ_arr).alias("sp")).select(
             "doc_id", F.col("sp.s").alias("s"), F.col("sp.h").alias("h")
         ),
+        source="documents",
     )
 
 
@@ -1004,13 +1010,14 @@ def _span_hash_stats(e) -> DataFrame:
     the pinned occurrence frame in one partial-aggregable pass per
     session instead of one aggregation per query per pass."""
     occ = _span_occ(e)
-    return corpus_pin(
+    return eager_cache(
         e,
         "dedup_span_stats",
         lambda: occ.groupBy("h").agg(
             F.min("doc_id").alias("canon_doc"),
             F.max("doc_id").alias("hi_doc"),
         ),
+        source="documents",
     )
 
 
@@ -1025,12 +1032,13 @@ def _span_flagged(e) -> DataFrame:
     the join already happened)."""
     occ = _span_occ(e)
     stats = _span_hash_stats(e)
-    return corpus_pin(
+    return eager_cache(
         e,
         "dedup_span_flagged",
         lambda: occ.join(stats, "h").select(
             "doc_id", "s", "canon_doc", "hi_doc"
         ),
+        source="documents",
     )
 
 

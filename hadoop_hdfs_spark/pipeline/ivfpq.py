@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import eager_cache_thunk, register
+from ..registry import eager_cache, register
 from .ann import DUCK_XE as _DUCK_XE
 from .ann import _quantized_vecs, _sq_dist
 from .ivftrain import _IVF_MAX_ITERS, _centroids_of, _ivf_chain_ctes, ivf_converged_assignment
@@ -148,7 +148,7 @@ GROUP BY x.query_id
     "(the s_knn_recall_clustered discipline).",
 )
 def s_knn_ivfpq(e) -> DataFrame:
-    return eager_cache_thunk(e, "ivfpq_recall", lambda: _ivfpq_recall(e))
+    return eager_cache(e, "ivfpq_recall", lambda: _ivfpq_recall(e))
 
 
 def _ivfpq_recall(e) -> DataFrame:
@@ -373,7 +373,7 @@ _INDEX_STAGE_VERSION = 1
     "search: the index is written once, partition-pruned per query batch.",
 )
 def s_knn_ivfpq_at_rest(e) -> DataFrame:
-    return eager_cache_thunk(
+    return eager_cache(
         e, "ivfpq_recall_at_rest", lambda: _ivfpq_recall_at_rest(e)
     )
 

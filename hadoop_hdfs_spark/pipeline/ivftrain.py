@@ -117,9 +117,9 @@ def _ivf_train_oracle() -> str:
     "on; argmin tiebreak (sq_dist, cell) pinned in both engines.",
 )
 def s_ivf_train(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "ivf_train_traj", lambda: _ivf_train_run(e))
+    return eager_cache(e, "ivf_train_traj", lambda: _ivf_train_run(e))
 
 
 def _centroids_of(asg: DataFrame, xe: DataFrame) -> DataFrame:
@@ -149,16 +149,16 @@ def ivf_converged_assignment(e) -> DataFrame:
     chain's ``iva_{_IVF_MAX_ITERS}``: past the fixpoint, centroid-update +
     reassign is the identity, so the capped unrolling and the
     early-breaking loop land on the same table."""
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(
+    return eager_cache(
         e, "ivf_converged_asg", lambda: _ivf_train_run(e, want="asg")
     )
 
 
 def _ivf_train_run(e, want: str = "traj") -> DataFrame:
     spark = e["embeddings"].sparkSession
-    xe = e["embeddings"].select(
+    raw_xe = e["embeddings"].select(
         "vec_id",
         F.transform(
             "embedding", lambda x: F.floor(x.cast("double") * 1000000).cast("long")
@@ -166,7 +166,7 @@ def _ivf_train_run(e, want: str = "traj") -> DataFrame:
     )
     from ..registry import eager_cache
 
-    xe = eager_cache(e, "ivf_train_xe", xe)  # every round scans it twice
+    xe = eager_cache(e, "ivf_train_xe", lambda: raw_xe)  # every round scans it twice
     asg = (
         e["embeddings"]
         .select("vec_id", F.col("label").alias("cell"))
@@ -214,6 +214,6 @@ def _ivf_train_run(e, want: str = "traj") -> DataFrame:
     # one loop run feeds both consumers: the trajectory gate and the
     # IVF-PQ search topology's converged partitioner (the eager_cache
     # calls are hits when the other consumer already ran the loop)
-    eager_cache(e, "ivf_train_traj", traj_df)
-    eager_cache(e, "ivf_converged_asg", asg)
+    eager_cache(e, "ivf_train_traj", lambda: traj_df)
+    eager_cache(e, "ivf_converged_asg", lambda: asg)
     return asg if want == "asg" else traj_df

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import eager_cache_thunk, register
+from ..registry import eager_cache, register
 from .ann import DUCK_XE as _DUCK_XE  # the ONE quantization definition
 from .ann import _quantized_vecs, _sq_dist
 from .similarity import QUERY_K, _query_sample
@@ -237,7 +237,7 @@ GROUP BY x.query_id
     "64x-compressed codes ship with a re-rank stage.",
 )
 def s_pq_adc_recall(e) -> DataFrame:
-    return eager_cache_thunk(
+    return eager_cache(
         e, "pq_adc_recall", lambda: _adc_recall(_quantized_vecs(e))
     )
 

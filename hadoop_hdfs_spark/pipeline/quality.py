@@ -150,7 +150,7 @@ JOIN t ON s.lang = t.lang
     "permille is integer division end to end.",
 )
 def t_quality_cdf(e) -> DataFrame:
-    from ..registry import corpus_pin
+    from ..registry import eager_cache
     from ..session import fan_out
 
     d = e["documents"]
@@ -165,7 +165,7 @@ def t_quality_cdf(e) -> DataFrame:
     # distinct subtree per pass, single-task, which is where the whole
     # sf1 cost lived (r12 measured 1.55 s -> the pin form; past the
     # budget the consumers recompute the fanned-out derivation).
-    scored = corpus_pin(
+    scored = eager_cache(
         e,
         "quality_cdf_scores",
         lambda: fan_out(d).select(
@@ -173,6 +173,7 @@ def t_quality_cdf(e) -> DataFrame:
             "lang",
             F.size(F.array_distinct(toks)).cast("long").alias("score"),
         ),
+        source="documents",
     )
     g = scored.groupBy("lang", "score").agg(F.count("*").cast("long").alias("cnt"))
     w = (

@@ -113,9 +113,9 @@ def s_knn_bruteforce(e) -> DataFrame:
     # consumes this exact ranking, so the corpus scan runs once per
     # (session, sf). Thunk form (r11): the dot-product folds are
     # construction-heavy, so a memo hit must skip building them.
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "knn_brute_top10", lambda: _build_knn_brute(e))
+    return eager_cache(e, "knn_brute_top10", lambda: _build_knn_brute(e))
 
 
 def _build_knn_brute(e) -> DataFrame:
@@ -178,9 +178,9 @@ WHERE rk <= 5
 def s_knn_ivf(e) -> DataFrame:
     # Same norm precomputation + result memoization as s_knn_bruteforce
     # (s_knn_recall_clustered reads this exact top-5).
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "knn_ivf_top5", lambda: _build_knn_ivf(e))
+    return eager_cache(e, "knn_ivf_top5", lambda: _build_knn_ivf(e))
 
 
 def _build_knn_ivf(e) -> DataFrame:
@@ -464,9 +464,9 @@ GROUP BY b.query_id
     "top-k windows, query-count-sized compare frames.",
 )
 def s_knn_recall_clustered(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "knn_recall_clustered", lambda: _recall_clustered(e))
+    return eager_cache(e, "knn_recall_clustered", lambda: _recall_clustered(e))
 
 
 def _recall_clustered(e) -> DataFrame:

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import eager_cache, register, eager_cache_thunk
+from ..registry import eager_cache, register
 from ..session import fan_out
 
 
@@ -39,7 +39,7 @@ def doc_token_counts(e) -> DataFrame:
             .agg(F.count("*").alias("cnt"))
         )
 
-    return eager_cache_thunk(e, "doc_tok_counts", _build)
+    return eager_cache(e, "doc_tok_counts", _build)
 
 
 @register(
@@ -299,7 +299,7 @@ def t_lang_id(e) -> DataFrame:
             .alias("w"),
         )
 
-    prof = eager_cache_thunk(e, "lang_profile", _build_prof)
+    prof = eager_cache(e, "lang_profile", _build_prof)
     scored = (
         doc_tok.select("doc_id", "t", "cnt")
         .join(prof, "t")
@@ -439,7 +439,7 @@ def t_top_bigrams(e) -> DataFrame:
     # The (lang, bigram) counts pin too — the per-language frequency
     # model table, vocabulary²-bounded like lm_c12 — so the warm plan is
     # the rank window over the bounded counts, not a corpus re-aggregation
-    cnt = eager_cache_thunk(
+    cnt = eager_cache(
         e,
         "bigram_lang_counts",
         lambda: _lm_bigrams(e)
@@ -530,7 +530,7 @@ def _lm_bigrams(e) -> DataFrame:
         ).otherwise(F.array().cast("array<string>"))
         return d.select("doc_id", "lang", F.explode(bigrams).alias("bigram"))
 
-    return eager_cache_thunk(e, "lm_bigrams", _build)
+    return eager_cache(e, "lm_bigrams", _build)
 
 
 @register(
@@ -593,12 +593,12 @@ def t_lm_perplexity(e) -> DataFrame:
     # bigram table twice per warm pass was this query's residual cost
     # after the r11 bigram pin; scoring (the bg|><|model join + per-doc
     # rollup) still runs in full every invocation.
-    c12 = eager_cache_thunk(
+    c12 = eager_cache(
         e,
         "lm_c12",
         lambda: bg.groupBy("bigram").agg(F.count("*").alias("n12")),
     )
-    c1 = eager_cache_thunk(
+    c1 = eager_cache(
         e,
         "lm_c1",
         lambda: bg.select(F.split("bigram", " ")[0].alias("w1"))
@@ -609,7 +609,7 @@ def t_lm_perplexity(e) -> DataFrame:
     # documents cost a full split+explode+distinct pass per invocation;
     # the one-row scalar pins too (its countDistinct over the rollup was
     # still a per-pass exchange)
-    v = eager_cache_thunk(
+    v = eager_cache(
         e,
         "lm_vocab",
         lambda: doc_token_counts(e).agg(F.countDistinct("t").alias("vocab")),

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,10 +55,10 @@ def _entities(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return _loaded[key]
 
 
-# Operator-level eager caches, memoized per (session, sf_dir, tag): lazy
-# cache() loses the race in multi-branch DAGs within one action (the eager
-# count() is required), but an un-memoized eager cache leaks one pinned
-# frame PER INVOCATION in a long-lived session. Memoizing bounds the cached
+# Operator pins, memoized per (session, sf_dir, tag): lazy cache() loses
+# the race in multi-branch DAGs within one action (the pin must
+# materialize eagerly), but an un-memoized eager pin leaks one pinned
+# frame PER INVOCATION in a long-lived session. Memoizing bounds the pinned
 # state to one entry per operator per scale factor — and lets operators
 # sharing an intermediate (e.g. the shingle table) reuse each other's work.
 # LRU-capped: a long-lived session cycling many (app, sf_dir, tag) combos
@@ -68,117 +69,86 @@ def _entities(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # LONGER than capacity misses on EVERY access — observed r8 as a 2.4x
 # warm-bench inflation when the tag count crossed the old cap of 32 (the
 # pinned drains re-ran each pass). 192 holds two SFs' working sets with
-# headroom (62 call sites x2 as of the r11 optimization round, which
-# added the model-table/blocksMap-column pins — tests/test_registry_cache
-# .py audits the AST count against the cap); the pinned frames are
-# queue/dimension/model-sized, so storage stays far below executor
-# memory.
+# headroom (62 call sites x2 — tests/test_registry_cache.py audits the
+# AST count against the cap); the pinned frames are queue/dimension/
+# model-sized, so storage stays far below executor memory.
 _CACHED: dict[tuple[str, str, str], DataFrame] = {}
+_CACHED_MAX = 192
+
+_RAW_PLANS = False  # see raw_plans
 
 
-def _cache_pins() -> int:
-    """Validated SPARK_GRAFT_CACHE_PINS: a floor of 1 keeps the eviction
-    loop well-defined (a cap of 0 would pop from an empty dict on the
-    first insert), and a malformed value fails with a named error instead
-    of an import-time ValueError with no context."""
-    raw = os.environ.get("SPARK_GRAFT_CACHE_PINS", "192")
-    try:
-        return max(1, int(raw))
-    except ValueError:
-        raise ValueError(
-            f"SPARK_GRAFT_CACHE_PINS must be an integer, got {raw!r}"
-        ) from None
-
-
-_CACHED_MAX = _cache_pins()
-
-# How operator pins materialize: "checkpoint" (default) eagerly computes
-# AND truncates lineage (small downstream plans — see eager_cache);
-# "cache" keeps the classic recompute-capable InMemoryRelation pin for
-# deployments where executor loss must not fail a running query; "off"
-# (plan-inspection only — see pin_override) passes the derivation through
-# untouched so its full physical shape stays visible to .explain().
-_PIN_MODE = os.environ.get("SPARK_GRAFT_PIN_MODE", "checkpoint")
-
-
-def pin_override(mode: str):
-    """Context manager: temporarily force the pin materialization mode.
+@contextmanager
+def raw_plans():
+    """Plan inspection: while active, :func:`eager_cache` returns the raw
+    derivation unpinned and :func:`queries` builds fresh plans.
 
     The plan-pin tests certify scale properties INSIDE pinned derivations
     (range-sharded kernels, broadcast sides); lineage truncation hides
     those from the composed query's .explain(), so the pins inspect the
     derivation with pinning off — the pin is an orthogonal
     materialization choice, not part of the operator's shape."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        global _PIN_MODE
-        old = _PIN_MODE
-        _PIN_MODE = mode
-        try:
-            yield
-        finally:
-            _PIN_MODE = old
-
-    return _cm()
+    global _RAW_PLANS
+    old = _RAW_PLANS
+    _RAW_PLANS = True
+    try:
+        yield
+    finally:
+        _RAW_PLANS = old
 
 
-def eager_cache(e: dict, tag: str, df: DataFrame) -> DataFrame:
-    if _PIN_MODE == "off":  # plan inspection: expose the raw derivation
-        return df
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        str(e.get("__sf_dir__", "?")),
-        tag,
+def _past_corpus_budget(e: dict, source: str) -> bool:
+    """True when the SOURCE table's on-disk parquet size exceeds the
+    validated SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES (default 256 MiB).
+    An unknown source (test frames) is under budget."""
+    try:
+        src_bytes = os.path.getsize(
+            os.path.join(str(e.get("__sf_dir__", "?")), f"{source}.parquet")
+        )
+    except OSError:
+        return False
+    raw = os.environ.get(
+        "SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES", str(256 * 1024 * 1024)
     )
-    if key in _CACHED:
-        _CACHED[key] = _CACHED.pop(key)  # move-to-end: mark recently used
-        return _CACHED[key]
-    while len(_CACHED) >= _CACHED_MAX:
-        cold_key = next(iter(_CACHED))
-        cold = _CACHED.pop(cold_key)
-        try:
-            cold.unpersist()
-        except Exception:
-            pass  # session may already be stopped; eviction still happened
-        # An unpersisted checkpoint pin cannot recompute (lineage is
-        # truncated), so any prepared query plan that embeds it is dead:
-        # drop this (session, sf)'s plan memo — construction re-runs and
-        # re-pins on the next invocation (correctness over reuse).
-        for qk in [k for k in _QUERY_PLANS if k[:2] == cold_key[:2]]:
-            _QUERY_PLANS.pop(qk, None)
-    if _PIN_MODE == "checkpoint":
-        # localCheckpoint = the same eager one-materialization pin, PLUS
-        # lineage truncation: the pinned frame's logical plan collapses to
-        # a LogicalRDD scan, so every composed query re-analyzes a
-        # ~10-node tree instead of the full derivation (the W2 queue's
-        # consumers carried 700+-node trees through analysis per
-        # invocation — r11 measured j10's construction alone at 1.2 s).
-        # Storage semantics match cache() (MEMORY_AND_DISK); the tradeoff
-        # is recompute-on-executor-loss becomes fail-and-rerun, which a
-        # cluster deployment can opt out of via SPARK_GRAFT_PIN_MODE=cache.
-        c = df.localCheckpoint(eager=True)
-    else:
-        c = df.cache()
-        c.count()
-    _CACHED[key] = c
-    return c
+    try:
+        return src_bytes > int(raw)
+    except ValueError:
+        raise ValueError(
+            "SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES must be an integer, "
+            f"got {raw!r}"
+        ) from None
 
 
-def eager_cache_thunk(e: dict, tag: str, thunk) -> DataFrame:
-    """Like :func:`eager_cache`, but the frame is built only on a cache
-    MISS. Needed when constructing the DataFrame itself runs jobs (the
-    iterative CC loop executes join+agg actions per round while BUILDING
-    its result): ``eager_cache(e, tag, expensive())`` evaluates
-    ``expensive()`` before the key is ever consulted, so the memoization
-    would never skip the work it exists to skip.
+def eager_cache(
+    e: dict,
+    tag: str,
+    build: Callable[[], DataFrame],
+    *,
+    source: str | None = None,
+) -> DataFrame:
+    """The operator pin: ``build()`` runs only on a memo MISS and its frame
+    is pinned once per (session, sf_dir, tag). Building only on a miss
+    matters because constructing a frame can itself run jobs (the CC loop
+    runs join+agg actions per round) or hundreds of py4j calls. The key's
+    applicationId comes from the active session — NOT from probing
+    ``build()``, which would run the build just to derive the key.
 
-    The cache key's applicationId comes from the active session (every
-    caller runs inside one) — NOT from probing ``thunk()``, which would
-    execute the expensive build just to derive the key (ADVICE r3)."""
-    if _PIN_MODE == "off":  # plan inspection: bypass the memo too
-        return thunk()
+    The pin is ``localCheckpoint(eager=True)``: one eager materialization
+    plus lineage truncation, so a composed query re-analyzes a ~10-node
+    LogicalRDD scan instead of the full derivation (r11: j10's
+    construction alone took 1.2 s over the W2 queue's 700+-node tree).
+    Storage matches cache() (MEMORY_AND_DISK); a pin whose blocks are
+    lost fails the query rather than recomputing.
+
+    ``source="documents"``/``"embeddings"`` marks a CORPUS-SCALE frame
+    (O(corpus tokens): exploded shingle/posting/span tables, pair grids)
+    that cannot be held per session at 100 TB. It pins only while the
+    source table's parquet is within SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES
+    (default 256 MiB: far above the fixtures, far below production); past
+    it the raw derivation is returned and each consumer recomputes from
+    the parquet inputs."""
+    if _RAW_PLANS or (source is not None and _past_corpus_budget(e, source)):
+        return build()
     session = SparkSession.getActiveSession()
     if session is None:  # fall back to any entity frame's session
         session = next(
@@ -189,55 +159,39 @@ def eager_cache_thunk(e: dict, tag: str, thunk) -> DataFrame:
         str(e.get("__sf_dir__", "?")),
         tag,
     )
-    if key in _CACHED:
-        _CACHED[key] = _CACHED.pop(key)
-        return _CACHED[key]
-    return eager_cache(e, tag, thunk())
+    if key not in _CACHED:
+        df = build()
+        # a build may pin this very tag itself (ivftrain's loop pins its
+        # sibling tags): serve that pin rather than pinning a second copy
+        if key not in _CACHED:
+            while len(_CACHED) >= _CACHED_MAX:
+                _evict(*next(iter(_CACHED)))
+            _CACHED[key] = df.localCheckpoint(eager=True)
+    _CACHED[key] = _CACHED.pop(key)  # move-to-end: mark recently used
+    return _CACHED[key]
 
 
-def _corpus_pin_budget() -> int:
-    """Validated SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES (default 256 MiB of
-    SOURCE bytes): the cap under which corpus-derived frames may pin."""
-    raw = os.environ.get(
-        "SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES", str(256 * 1024 * 1024)
-    )
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES must be an integer, "
-            f"got {raw!r}"
-        ) from None
+def evict(spark: SparkSession, sf_dir: str, tag: str | None = None) -> None:
+    """Unpersist this session's ``tag`` pin at ``sf_dir`` (when a tag is
+    given) and drop the (session, sf_dir)'s prepared plans. An unpersisted
+    checkpoint pin cannot recompute (its lineage is truncated), so any
+    prepared plan that embeds it is dead: construction re-runs and
+    re-pins on the next invocation. Evicting a drain gate's result tag
+    makes its next invocation drain for real."""
+    _evict(spark.sparkContext.applicationId, sf_dir, tag)
 
 
-def corpus_pin(e: dict, tag: str, thunk, source: str = "documents") -> DataFrame:
-    """:func:`eager_cache_thunk` with an explicit executor-storage budget
-    for CORPUS-SCALE frames (judge r11 #8).
-
-    The metadata-, queue- and model-table pins are bounded by namespace /
-    node / vocabulary size and stay pinned unconditionally. The frames
-    routed through here are different: exploded shingle/posting/span
-    tables and pair grids are O(corpus tokens) — at 100 TB they cannot be
-    held in executor storage per session, and while ``localCheckpoint``'s
-    MEMORY_AND_DISK level spills rather than OOMs, a corpus-sized spill
-    is still the wrong plan. The guard keys on the SOURCE table's
-    on-disk parquet size (cheap, no job): at or under
-    SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES (default 256 MiB — far above the
-    fixtures, far below production) the frame pins exactly as before;
-    past it the raw derivation is returned and every consumer recomputes
-    from the parquet inputs — the partition-pruned-rebuild story a real
-    deployment would use (recompute the postings for the partitions a
-    query touches instead of holding the corpus exploded in RAM)."""
-    if _PIN_MODE == "off":  # plan inspection bypasses pins entirely
-        return thunk()
-    sf_dir = str(e.get("__sf_dir__", "?"))
-    try:
-        src_bytes = os.path.getsize(os.path.join(sf_dir, f"{source}.parquet"))
-    except OSError:
-        src_bytes = None  # unknown source (test frames): pin as before
-    if src_bytes is not None and src_bytes > _corpus_pin_budget():
-        return thunk()
-    return eager_cache_thunk(e, tag, thunk)
+def _evict(app: str, sf_dir: str, tag: str | None) -> None:
+    """:func:`evict` by application id (the LRU holds keys, not sessions;
+    a cold key's session may already be stopped)."""
+    pinned = _CACHED.pop((app, sf_dir, tag), None)
+    if pinned is not None:
+        try:
+            pinned.unpersist()
+        except Exception:
+            pass  # session may already be stopped; eviction still happened
+    for k in [k for k in _QUERY_PLANS if k[:2] == (app, sf_dir)]:
+        del _QUERY_PLANS[k]
 
 
 def _import_operator_modules() -> None:
@@ -268,7 +222,7 @@ def queries() -> dict[str, QueryFn]:
 
         def make(q: Query) -> QueryFn:
             def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-                if _PIN_MODE == "off":  # plan inspection: fresh raw build
+                if _RAW_PLANS:  # plan inspection: fresh raw build
                     return q.fn(_entities(spark, sf_dir))
                 key = (spark.sparkContext.applicationId, sf_dir, q.name)
                 got = _QUERY_PLANS.get(key)

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..registry import eager_cache_thunk, register
+from ..registry import eager_cache, register
 
 # Shared segment selection: the same text builds the staged changelog
 # (through Spark) and opens the oracle (through DuckDB). Parent-directory
@@ -170,4 +170,4 @@ def t2c_checkpoint_replay(e) -> DataFrame:
         finally:
             shutil.rmtree(work, ignore_errors=True)
 
-    return eager_cache_thunk(e, "t2c_checkpoint", build)
+    return eager_cache(e, "t2c_checkpoint", build)

@@ -126,9 +126,9 @@ SELECT DISTINCT md5(text) AS text_md5 FROM documents
 def t19_stream_dedup(e):
     # memoized like every other certification gate: each invocation would
     # otherwise re-drain AND pin a fresh never-released localCheckpoint
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "t19_dedup_result", lambda: _t19_run(e))
+    return eager_cache(e, "t19_dedup_result", lambda: _t19_run(e))
 
 
 def _t19_run(e):

@@ -50,7 +50,7 @@ GROUP BY 1, 2
     "micro-batch shuffle moves partial counts only.",
 )
 def t20_stream_enrich(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
     def build() -> DataFrame:
         spark = e["events"].sparkSession
@@ -102,6 +102,6 @@ def t20_stream_enrich(e) -> DataFrame:
         spark.catalog.dropTempView(name)
         return out
 
-    return eager_cache_thunk(e, "t20_enrich_result", build)
+    return eager_cache(e, "t20_enrich_result", build)
 
 

@@ -171,7 +171,7 @@ JOIN adds a ON a.path = c.path
     "deterministic; production would let eviction run continuously.",
 )
 def t18_stream_open_close(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
     def build() -> DataFrame:
         spark = e["edits"].sparkSession
@@ -233,6 +233,6 @@ def t18_stream_open_close(e) -> DataFrame:
         spark.catalog.dropTempView(name)
         return out
 
-    return eager_cache_thunk(e, "t18_pairs_result", build)
+    return eager_cache(e, "t18_pairs_result", build)
 
 

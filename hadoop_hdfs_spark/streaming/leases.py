@@ -70,7 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..entities import LEASE_HARD_MS, LEASE_SOFT_MS, NOW_MS
-from ..registry import eager_cache_thunk, register
+from ..registry import eager_cache, register
 
 _T23_WINDOWS = 8
 _T23_SEQ = itertools.count(1)
@@ -214,4 +214,4 @@ def t23_lease_expiry_stream(e) -> DataFrame:
         spark.catalog.dropTempView(name)
         return res
 
-    return eager_cache_thunk(e, "t23_leases", build)
+    return eager_cache(e, "t23_leases", build)

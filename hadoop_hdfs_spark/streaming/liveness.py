@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..entities import HEARTBEAT_EXPIRY_MS, NOW_MS
-from ..registry import eager_cache_thunk, register
+from ..registry import eager_cache, register
 
 _T22_WINDOWS = 8
 _T22_SEQ = itertools.count(1)
@@ -170,4 +170,4 @@ def t22_heartbeat_liveness_stream(e) -> DataFrame:
         spark.catalog.dropTempView(name)
         return res
 
-    return eager_cache_thunk(e, "t22_liveness", build)
+    return eager_cache(e, "t22_liveness", build)

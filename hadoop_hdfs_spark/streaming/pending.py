@@ -54,7 +54,7 @@ import itertools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..registry import eager_cache_thunk, register
+from ..registry import eager_cache, register
 
 # Timeout = 4 lag steps: in-horizon confirms (1..4 steps) beat it, the
 # rest of the in-flight work times out. Expressed in lag-step units so the
@@ -232,4 +232,4 @@ def t21_pending_timeout_stream(e) -> DataFrame:
         spark.catalog.dropTempView(name)
         return res
 
-    return eager_cache_thunk(e, "t21_pending", build)
+    return eager_cache(e, "t21_pending", build)

@@ -505,9 +505,9 @@ WHERE f.rk > {_T1B_QUOTA}
     "single-threaded loop); quota dirs are an admin-bounded set.",
 )
 def t1b_quota_rejections(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "t1b_quota", lambda: _t1b_run(e))
+    return eager_cache(e, "t1b_quota", lambda: _t1b_run(e))
 
 
 # ----------------------------------------------------------- driver gate
@@ -582,9 +582,9 @@ WHERE f.acc + s.charge > {_T1C_DS_QUOTA}
     "set.",
 )
 def t1c_ds_quota_rejections(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "t1c_quota", lambda: _t1c_run(e))
+    return eager_cache(e, "t1c_quota", lambda: _t1c_run(e))
 
 
 def _t1c_run(e) -> DataFrame:

@@ -103,9 +103,9 @@ def t14_stream_rates(e) -> DataFrame:
     # memoized like every other certification gate: each invocation would
     # otherwise re-drain AND pin a fresh never-released localCheckpoint
     # (one leaked pin per warm pass in a long-lived session)
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
-    return eager_cache_thunk(e, "t14_rates_result", lambda: _t14_run(e))
+    return eager_cache(e, "t14_rates_result", lambda: _t14_run(e))
 
 
 def _t14_run(e) -> DataFrame:

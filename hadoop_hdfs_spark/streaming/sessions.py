@@ -205,7 +205,7 @@ GROUP BY user_id, sid
     "order-independent.",
 )
 def t17_stream_sessions(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
+    from ..registry import eager_cache
 
     def build() -> DataFrame:
         ev_batch = e["events"]
@@ -266,6 +266,6 @@ def t17_stream_sessions(e) -> DataFrame:
         spark.catalog.dropTempView(name)
         return out
 
-    return eager_cache_thunk(e, "t17_sessions_result", build)
+    return eager_cache(e, "t17_sessions_result", build)
 
 

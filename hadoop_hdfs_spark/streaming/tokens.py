@@ -52,7 +52,7 @@ import itertools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..registry import eager_cache_thunk, register
+from ..registry import eager_cache, register
 
 _T26_WINDOWS = 8
 _T26_SEQ = itertools.count(1)
@@ -250,4 +250,4 @@ def t26_token_expiry_stream(e) -> DataFrame:
         spark.catalog.dropTempView(name)
         return res
 
-    return eager_cache_thunk(e, "t26_tokens", build)
+    return eager_cache(e, "t26_tokens", build)

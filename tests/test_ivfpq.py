@@ -69,7 +69,7 @@ def test_ivfpq_plan_broadcasts_all_small_sides(spark, sf_dir):
     # raw derivation: the r11 lineage-truncating checkpoint pin renders a
     # memo-hit frame as a bare `Scan ExistingRDD`, hiding the join shapes
     # this pin certifies (the test_plans.py raw=True pattern)
-    with registry.pin_override("off"):
+    with registry.raw_plans():
         plan = formatted_plan(QUERIES["s_knn_ivfpq"](spark, sf_dir)).split(
             "\n\n"
         )[0]
@@ -227,7 +227,7 @@ def test_at_rest_gate_matches_in_memory_gate_and_prunes(spark, sf_dir):
     assert a == b and a, (len(a), len(b), len(a ^ b))
     # the prune lives in the codes scan INSIDE the pinned derivation; a
     # memo-hit checkpoint pin stringifies as `Scan ExistingRDD` (r11)
-    with registry.pin_override("off"):
+    with registry.raw_plans():
         plan = formatted_plan(QUERIES["s_knn_ivfpq_at_rest"](spark, sf_dir))
     assert re.search(r"PartitionFilters: \[[^\]]*cell[^\]]*IN", plan), plan[:2000]
 

@@ -22,14 +22,14 @@ QUERIES = registry.queries()
 def _plan(spark, sf_dir, name: str, raw: bool = False) -> str:
     """Formatted plan of a registered query.
 
-    ``raw=True`` inspects the UN-pinned derivation (registry.pin_override
-    "off"): pins that certify shapes INSIDE an eager-cached subtree
-    (kernels, broadcast sides) need the derivation, which the r11
+    ``raw=True`` inspects the UN-pinned derivation (registry.raw_plans):
+    pins that certify shapes INSIDE an eager-cached subtree (kernels,
+    broadcast sides) need the derivation, which the r11
     lineage-truncating checkpoint pin hides from the composed plan."""
     if raw:
         from hadoop_hdfs_spark import registry
 
-        with registry.pin_override("off"):
+        with registry.raw_plans():
             return formatted_plan(QUERIES[name](spark, sf_dir))
     return formatted_plan(QUERIES[name](spark, sf_dir))
 
@@ -230,9 +230,9 @@ def test_metasave_reuses_cached_queue_and_broadcasts_nodes(spark, sf_dir):
     # m1 iterates the CACHED W2 queue (the reference's in-memory
     # neededReplications) and broadcasts the node dimension
     plan = _plan(spark, sf_dir, "m1_metasave")
-    # the pinned queue reads as InMemoryTableScan (cache pin mode) or as a
-    # lineage-truncated ExistingRDD scan (checkpoint pin mode, the r11
-    # default) — either way the W2 derivation is not re-run
+    # the pinned queue reads as a lineage-truncated ExistingRDD scan (the
+    # checkpoint pin; InMemoryTableScan is a cache() pin's shape) — either
+    # way the W2 derivation is not re-run
     assert "InMemoryTableScan" in plan or "Scan ExistingRDD" in plan
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
@@ -395,12 +395,7 @@ def test_t8b_mass_decommission_drops_forced_broadcasts(spark, sf_dir, monkeypatc
         # the prepared-plan memo would otherwise serve a frame built
         # under the OTHER budget setting — evict so construction re-reads
         # the env and the guard actually decides
-        for k in [
-            k
-            for k in registry._QUERY_PLANS
-            if k[2] == "t8b_decommission_progress"
-        ]:
-            registry._QUERY_PLANS.pop(k)
+        registry.evict(spark, sf_dir)
         return sorted(
             map(
                 tuple,
@@ -444,8 +439,8 @@ def test_incremental_near_dup_probes_base_buckets_only(spark, sf_dir):
     # d_minhash_lsh), so the base corpus text is touched once per session
     plan = _plan(spark, sf_dir, "d_incremental_near_dup")
     assert "CartesianProduct" not in plan
-    # cached bands on both sides: InMemoryTableScan under cache pin mode,
-    # lineage-truncated ExistingRDD scans under checkpoint mode (r11)
+    # pinned bands on both sides: lineage-truncated ExistingRDD scans (the
+    # checkpoint pin; InMemoryTableScan is a cache() pin's shape)
     pinned_scans = plan.count("InMemoryTableScan") + plan.count(
         "Scan ExistingRDD"
     )

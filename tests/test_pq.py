@@ -117,7 +117,7 @@ def test_pq_adc_recall_broadcasts_query_side(spark, sf_dir):
 
     # raw derivation (r11 checkpoint pins hide memo-hit shapes; the
     # test_plans.py raw=True pattern)
-    with registry.pin_override("off"):
+    with registry.raw_plans():
         plan = formatted_plan(QUERIES["s_pq_adc_recall"](spark, sf_dir)).split(
             "\n\n"
         )[0]

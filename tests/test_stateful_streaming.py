@@ -416,12 +416,41 @@ def test_t26_output_invariant_to_stream_slicing(spark, sf_dir, monkeypatch):
     }
     monkeypatch.setattr(tok, "_T26_WINDOWS", 3)  # code_ver keys a new stage
     # evict the memoized 8-window frame so the query rebuilds and re-drains
-    from hadoop_hdfs_spark.registry import _CACHED
-
     e = registry._entities(spark, sf_dir)
     monkeypatch.setattr(tok, "_T26_SEQ", iter(range(1000, 2000)))
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _CACHED if k[0] == app and k[2] == "t26_tokens"]:
-        _CACHED.pop(k)
+    registry.evict(spark, sf_dir, "t26_tokens")
     resliced = {tuple(r) for r in tok.t26_token_expiry_stream(e).collect()}
     assert resliced == baseline and baseline
+
+
+def test_evicted_drain_gate_redrains_once_with_same_rows(spark, sf_dir):
+    """A drain gate serves its memoized result within a session; evicting
+    its result tag (what bench.py's redrain leg does) must force exactly
+    one real drain — one new streaming query — and the re-drained rows
+    must equal the first run's."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from hadoop_hdfs_spark import registry
+
+    run = registry.queries()["t14_stream_rates"]
+    first = sorted(map(tuple, run(spark, sf_dir).collect()))
+
+    started = []
+
+    class _Started(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            started.append(event.id)
+
+        onQueryProgress = onQueryIdle = onQueryTerminated = lambda s, e: None
+
+    listener = _Started()
+    spark.streams.addListener(listener)
+    try:
+        registry.evict(spark, sf_dir, "t14_rates_result")
+        again = sorted(map(tuple, run(spark, sf_dir).collect()))
+        memo = sorted(map(tuple, run(spark, sf_dir).collect()))
+    finally:
+        spark.streams.removeListener(listener)
+    assert len(started) == 1, started
+    assert again == first and first
+    assert memo == first

@@ -51,7 +51,7 @@ def main() -> None:
     ap.add_argument("--plans-round", default="r12",
                     help="plans/ subdirectory the dumps go to")
     ap.add_argument("--raw-plans", action="store_true",
-                    help="dump plans under pin_override('off') so pinned "
+                    help="dump plans under registry.raw_plans() so pinned "
                          "derivations keep their full physical shape "
                          "(VERDICT r11 #9) instead of collapsing to a "
                          "Scan ExistingRDD memo hit")
@@ -113,7 +113,7 @@ def main() -> None:
     if args.plans_suffix:
         from contextlib import nullcontext
 
-        ctx = registry.pin_override("off") if args.raw_plans else nullcontext()
+        ctx = registry.raw_plans() if args.raw_plans else nullcontext()
         with ctx:
             for n in names:
                 with open(os.path.join(plans_dir, f"{n}_{args.plans_suffix}.txt"), "w") as f:
